@@ -1099,7 +1099,7 @@ object CodecImpl {
 
   /** Native synthesis of the scene-cut gate's planted Y4M payload —
     * byte-identical to the Column formula it replaces
-    * ([[graft.operators.Multimodal.scenePayloadColumns]], pinned by
+    * (`graft.PayloadReference.scenePayloadColumns` in test sources, pinned by
     * spec): per-frame constant luma = shot base (40 + id%30 before
     * the cut, 180 + id%40 after) + deterministic jitter
     * ((id·7 + f·13) % 9 − 4), chroma bytes from the "sc" md5 chain,
@@ -1141,7 +1141,7 @@ object CodecImpl {
 
   /** Native synthesis of the video-fingerprint gates' twin-planted
     * Y4M payload — byte-identical to the Column formula it replaces
-    * ([[graft.operators.Multimodal.vfpPayloadColumns]], pinned by
+    * (`graft.PayloadReference.vfpPayloadColumns` in test sources, pinned by
     * spec): constant-luma frames whose per-frame byte is byte f of
     * the BASE doc's "vf" md5 chain (exact twins at id−8, retouched
     * twins at id−16 with frame 0 forced to 0xFF, short clips at
@@ -1183,7 +1183,7 @@ object CodecImpl {
 
   /** Native synthesis of the beacon DAG's planted TLV wire payload
     * from (user_id, event_id) — byte-identical to the Column formula
-    * it replaces ([[graft.plans.BeaconPipeline.beaconRawTlvColumns]],
+    * it replaces (`graft.PayloadReference.beaconRawTlvColumns` in test sources,
     * pinned by PayloadParitySpec over a dense residue grid). The
     * Column tree built five survey blobs through per-piece
     * hex/lpad/format_string/concat chains (~20 µs/row of UTF8String

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Classifier, Elections}
 
@@ -36,9 +35,7 @@ import graft.operators.{Classifier, Elections}
   * rollup — nothing history-sized touches the hot loop (training and
   * the election ran once, before the stream started).
   *
-  * Exactly-once: checkpointed file source + idempotent sink — each
-  * micro-batch overwrites its own `batch_id=<n>` partition, so a
-  * replayed batch rewrites identical rows (the AckSink discipline).
+  * Exactly-once through [[ScreenLoop]].
   */
 object ClsScreen {
 
@@ -86,7 +83,8 @@ object ClsScreen {
       checkpointDir: String, minMargin: Long = 0L,
       buckets: Int = Classifier.Buckets,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       // the artifact read is per-batch by design: a deployment swaps
       // the model by replacing the directory between retrains, and a
@@ -100,28 +98,14 @@ object ClsScreen {
         if (fs.exists(new Path(modelDir, "weights"))) s"$modelDir/weights"
         else modelDir // legacy weights-at-root layout
       val scored = Classifier.scoreWith(batch, s.read.parquet(wPath), buckets)
-      val out =
-        if (fs.exists(new Path(modelDir, "cut"))) {
-          val cut = s.read.parquet(s"$modelDir/cut")
-          scored.join(batch.select("doc_id", "lang"), "doc_id")
-            .withColumn("mbkt", expr(Classifier.MarginBucketSql))
-            .join(broadcast(cut), Seq("lang"))
-            .filter(col("mbkt") >= col("b_threshold"))
-            .select("doc_id", "lang", "n_feat", "margin_e9", "b_threshold")
-        } else scored.filter(col("margin_e9") >= minMargin)
-      out.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      if (fs.exists(new Path(modelDir, "cut"))) {
+        val cut = s.read.parquet(s"$modelDir/cut")
+        scored.join(batch.select("doc_id", "lang"), "doc_id")
+          .withColumn("mbkt", expr(Classifier.MarginBucketSql))
+          .join(broadcast(cut), Seq("lang"))
+          .filter(col("mbkt") >= col("b_threshold"))
+          .select("doc_id", "lang", "n_feat", "margin_e9", "b_threshold")
+      } else scored.filter(col("margin_e9") >= minMargin)
     }
   }
 

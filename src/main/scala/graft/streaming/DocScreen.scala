@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.Dedup
 import graft.plans.DedupCatalog
@@ -23,12 +22,7 @@ import graft.plans.DedupCatalog
   * batch, not with history (round 9's per-batch re-shingling gap,
   * closed).
   *
-  * Exactly-once: checkpointed file source + an IDEMPOTENT sink —
-  * each micro-batch overwrites its own `batch_id=<n>` partition, so
-  * a batch replayed after a crash-before-offset-commit rewrites the
-  * same rows instead of appending duplicates (the same batchId-keyed
-  * idempotence discipline as [[graft.streaming]]'s AckSink; a blind
-  * append would only be at-least-once).
+  * Exactly-once through [[ScreenLoop]].
   */
 object DocScreen {
 
@@ -87,15 +81,16 @@ object DocScreen {
       schema: StructType, cat: DedupCatalog.Handle,
       sinkDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 1, appendAccepted: Boolean = false): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val s = batch.sparkSession
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger, Option.when(appendAccepted)(DedupCatalog.append(_, _, cat, _)),
+        survivorsBy = Some("doc_id")) { (batch, batchId) =>
       // materialized once: the verdicts feed the sink write AND the
       // accepted-set anti-join without recomputing the screen. In the
       // append loop the screen is BOUNDED to ingest partitions <=
       // batchId: a batch replayed after a crash-after-append would
       // otherwise see its own survivors (partition batchId+1) and
       // flag every one as a jac-1.0 self-duplicate.
-      val catalogV = DedupCatalog.screen(s, batch, cat,
+      val catalogV = DedupCatalog.screen(batch.sparkSession, batch, cat,
         maxIngestId = if (appendAccepted) Some(batchId) else None)
         .localCheckpoint(true)
       // the ingest loop additionally near-dups the batch WITHIN itself
@@ -107,33 +102,12 @@ object DocScreen {
       // history doc (transitive one-survivor-per-set). Stateless mode
       // (appendAccepted=false) keeps the pure catalog screen, whose
       // verdicts are independent of micro-batching by construction.
-      val verdicts = if (!appendAccepted) catalogV else {
+      if (!appendAccepted) catalogV else {
         val intra = Dedup.intraBatchVerdicts(
           Dedup.minhashLshFrom(Dedup.shinglesOf(batch, "doc")), "doc_id", "jac")
           .join(catalogV.select("doc_id"), Seq("doc_id"), "left_anti")
         catalogV.unionByName(intra).localCheckpoint(true)
       }
-      verdicts.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      if (appendAccepted)
-        DedupCatalog.append(s,
-          batch.join(verdicts.select("doc_id"), Seq("doc_id"), "left_anti"),
-          cat, batchId + 1)
-      // the screen pins only batch-side subtrees, all registered under
-      // foreachBatch's CLONED per-batch session — releasing that
-      // session alone drops them without touching anything the caller
-      // pinned on the outer session
-      graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.plans.GramCatalog
 
@@ -23,40 +22,22 @@ import graft.plans.GramCatalog
   * whole-corpus backfill ([[graft.operators.Dedup.dupSpans]]) is a
   * different operator answering a different question.
   *
-  * Exactly-once: checkpointed file source; the verdict write
-  * overwrites its own `batch_id=<n>` partition and the stats append
-  * is a dynamic partition overwrite of partition batchId + 1, with
-  * the screen bounded to ≤ batchId — a batch replayed after a
-  * crash-after-append rewrites identical state and can never see its
-  * own grams as history.
+  * Exactly-once through [[ScreenLoop]], the screen bounded to
+  * ≤ batchId.
   */
 object GramScreen {
 
   def spanScreen(spark: SparkSession, srcDir: String, schema: StructType,
       cat: GramCatalog.Handle, sinkDir: String, checkpointDir: String,
       minDocs: Int = 2, maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val s = batch.sparkSession
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger, Some(GramCatalog.append(_, _, cat, _))) { (batch, batchId) =>
       // no checkpoint: the span frame has exactly one reader (the
       // sink write), so an eager materialization job would be pure
-      // overhead; the append below never affects this screen (bounded
-      // to ingest partitions <= batchId)
-      val spans = GramCatalog.screen(s, batch, cat, minDocs,
+      // overhead; the append never affects this screen (bounded to
+      // ingest partitions <= batchId)
+      GramCatalog.screen(batch.sparkSession, batch, cat, minDocs,
         maxIngestId = Some(batchId))
-      spans.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      GramCatalog.append(s, batch, cat, batchId + 1)
-      graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 

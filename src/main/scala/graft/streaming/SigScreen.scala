@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.plans.SigCatalog
 
@@ -23,38 +22,19 @@ import graft.plans.SigCatalog
   * sequential per-batch loop over the same files in the same order —
   * the oracle replays exactly that, batch by batch.
   *
-  * Exactly-once: checkpointed file source; the verdict write
-  * overwrites its own `batch_id=<n>` partition and the survivor
-  * append is a dynamic partition overwrite of partition batchId + 1,
-  * with the screen bounded to ≤ batchId — a batch replayed after a
-  * crash-after-append rewrites identical state and can never see its
-  * own signatures as history.
+  * Exactly-once through [[ScreenLoop]], the screen bounded to
+  * ≤ batchId.
   */
 object SigScreen {
 
   def sigScreen(spark: SparkSession, srcDir: String, schema: StructType,
       cat: SigCatalog.Handle, sinkDir: String, checkpointDir: String,
       maxHamming: Int = 3, maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val s = batch.sparkSession
-      val verdicts = SigCatalog.screen(s, batch, cat, maxHamming,
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger, Some(SigCatalog.append(_, _, cat, _)),
+        survivorsBy = Some("doc_id")) { (batch, batchId) =>
+      SigCatalog.screen(batch.sparkSession, batch, cat, maxHamming,
         maxIngestId = Some(batchId)).localCheckpoint(true)
-      verdicts.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      SigCatalog.append(s,
-        batch.join(verdicts.select("doc_id"), Seq("doc_id"), "left_anti"),
-        cat, batchId + 1)
-      graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 

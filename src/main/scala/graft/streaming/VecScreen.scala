@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.plans.{SemCatalog, VecCatalog}
 
@@ -20,9 +19,7 @@ import graft.plans.{SemCatalog, VecCatalog}
   * bucketing + a candidate join reading the catalog co-partitioned on
   * the bucket key — per-batch cost scales with the batch, not history.
   *
-  * Exactly-once: checkpointed file source + idempotent sink — each
-  * micro-batch overwrites its own `batch_id=<n>` partition (same
-  * discipline as [[DocScreen]] and AckSink).
+  * Exactly-once through [[ScreenLoop]].
   */
 object VecScreen {
 
@@ -65,12 +62,13 @@ object VecScreen {
       sinkDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 1, appendAccepted: Boolean = false,
       multiProbe: Boolean = false): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val s = batch.sparkSession
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger, Option.when(appendAccepted)(VecCatalog.append(_, _, cat, _)),
+        survivorsBy = Some("vec_id")) { (batch, batchId) =>
       // bounded to ingest partitions <= batchId in the append loop so
       // a crash-replayed batch cannot self-match against its own
       // pre-crash append (see DocScreen)
-      val catalogV0 = VecCatalog.screen(s, batch, cat,
+      val catalogV0 = VecCatalog.screen(batch.sparkSession, batch, cat,
         maxIngestId = if (appendAccepted) Some(batchId) else None,
         multiProbe = multiProbe)
       // ingest loop: near-dup the batch WITHIN itself too
@@ -79,7 +77,7 @@ object VecScreen {
       // The checkpoint exists for the two-reader append path only; the
       // screen-only path writes the verdicts once and a forced
       // materialization job would be pure overhead.
-      val verdicts = if (!appendAccepted) catalogV0 else {
+      if (!appendAccepted) catalogV0 else {
         val catalogV = catalogV0.localCheckpoint(true)
         val intra = graft.operators.Dedup.intraBatchVerdicts(
           graft.operators.Similarity.embeddingNearDupLshFrom(batch),
@@ -87,22 +85,6 @@ object VecScreen {
           .join(catalogV.select("vec_id"), Seq("vec_id"), "left_anti")
         catalogV.unionByName(intra).localCheckpoint(true)
       }
-      verdicts.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      if (appendAccepted)
-        VecCatalog.append(s,
-          batch.join(verdicts.select("vec_id"), Seq("vec_id"), "left_anti"),
-          cat, batchId + 1)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 
@@ -183,7 +165,9 @@ object VecScreen {
       threshold: Double = 0.95, maxFilesPerTrigger: Int = 1): Unit = {
     import org.apache.spark.sql.functions.col
     import graft.operators.Similarity
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    ScreenLoop.run(spark, srcDir, schema, sinkDir, checkpointDir,
+        maxFilesPerTrigger, Some(SemCatalog.append(_, _, cat, _)),
+        survivorsBy = Some("vec_id")) { (batch, batchId) =>
       val s = batch.sparkSession
       val catalogV = SemCatalog.screen(s, batch, cat, threshold,
           maxIngestId = Some(batchId))
@@ -199,26 +183,11 @@ object VecScreen {
       // mate reports the same kept_by witness on both surfaces (the
       // drop set was already identical; this aligns the witness).
       // max_cos rounding commutes with max (round is monotone).
-      val verdicts = catalogV.unionByName(intra)
+      catalogV.unionByName(intra)
         .groupBy("vec_id", "cid")
         .agg(org.apache.spark.sql.functions.min("kept_by").as("kept_by"),
           org.apache.spark.sql.functions.max("max_cos").as("max_cos"))
         .localCheckpoint(true)
-      verdicts.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      SemCatalog.append(s,
-        batch.join(verdicts.select("vec_id"), Seq("vec_id"), "left_anti"),
-        cat, batchId + 1)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 }

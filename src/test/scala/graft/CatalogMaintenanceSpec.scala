@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{DedupCatalog, VecCatalog}
+import graft.plans.{BucketedLayout, DedupCatalog, GramCatalog, LandedCatalog,
+  SemCatalog, SigCatalog, VecCatalog}
 
 /** Catalog maintenance lifecycle: compaction must be a pure LAYOUT
   * change (screen verdicts identical, partition/file count drops),
@@ -48,6 +50,165 @@ class CatalogMaintenanceSpec extends AnyFunSuite {
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("ingest_id="))
+  }
+
+  /** One catalog family under the shared lifecycle: a landing of even
+    * ids below 300, appended batches 1 and 2 (even ids in [300, 400)
+    * and [400, 500)), and a verdict probe whose answer compaction must
+    * not change. `marker` is the `_LANDED` content the family's landing
+    * wrote before the lifecycle moved into one base class.
+    */
+  private abstract class Family(val name: String) {
+    val cat: LandedCatalog
+    def land(n: String, nBuckets: Int = 8): cat.Handle
+    def append(h: cat.Handle, id: Long): Unit
+    def verdicts(h: cat.Handle): Seq[String]
+    def marker(nBuckets: Int): String = s"nBuckets=$nBuckets"
+    def checkMarker(h: cat.Handle): Unit = ()
+  }
+
+  private def evenIds(df: DataFrame, id: String, lo: Int, hi: Int) =
+    df.filter(col(id) % 2 === 0 && col(id) >= lo && col(id) < hi)
+
+  private def batchRange(id: Long) = ((200 + 100 * id).toInt, (300 + 100 * id).toInt)
+
+  private def rows(df: DataFrame): Seq[String] = {
+    val r = df.collect().map(_.toString).sorted.toSeq
+    Shared.releaseAll(spark)
+    r
+  }
+
+  private def emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+
+  private def vecProbe = {
+    val twin = emb.select((col("vec_id") + 1).as("vec_id"), col("embedding").as("h_emb"))
+    emb.filter(col("vec_id") % 2 === 1)
+      .join(twin, Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        when(col("vec_id") % 7 === 3, col("h_emb"))
+          .otherwise(col("embedding")).as("embedding"))
+  }
+
+  private def sigs = graft.operators.Multimodal.dhashSignatures(spark, dir)
+
+  private def sigProbe = {
+    val twin = sigs.select((col("doc_id") + 1).as("doc_id"), col("sh").as("h_sh"))
+    sigs.filter(col("doc_id") % 2 === 1)
+      .join(twin, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("doc_id") % 10 === 1 && col("h_sh").isNotNull,
+          col("h_sh").bitwiseXOR(lit(1L)))
+          .otherwise(col("sh")).as("sh"))
+  }
+
+  private def families: Seq[Family] = Seq(
+    new Family("dedup") {
+      val cat: DedupCatalog.type = DedupCatalog
+      def land(n: String, nBuckets: Int) =
+        DedupCatalog.land(spark, evens(0, 300), n, nBuckets = nBuckets)
+      def append(h: cat.Handle, id: Long) = {
+        val (lo, hi) = batchRange(id)
+        DedupCatalog.append(spark, evens(lo, hi), h, id)
+      }
+      def verdicts(h: cat.Handle) = rows(DedupCatalog.screen(spark, probe, h))
+    },
+    new Family("gram") {
+      val cat: GramCatalog.type = GramCatalog
+      def land(n: String, nBuckets: Int) =
+        GramCatalog.land(spark, evens(0, 300), n, k = 4, nBuckets = nBuckets)
+      def append(h: cat.Handle, id: Long) = {
+        val (lo, hi) = batchRange(id)
+        GramCatalog.append(spark, evens(lo, hi), h, id)
+      }
+      def verdicts(h: cat.Handle) = rows(GramCatalog.stats(spark, h))
+      override def marker(nBuckets: Int) = s"nBuckets=$nBuckets,k=4"
+      override def checkMarker(h: cat.Handle) =
+        assert(GramCatalog.kOf(spark, h) === 4, "reattach lost the persisted k")
+    },
+    new Family("sem") {
+      val cat: SemCatalog.type = SemCatalog
+      def land(n: String, nBuckets: Int) =
+        SemCatalog.land(spark, evenIds(emb, "vec_id", 0, 300), n, nBuckets = nBuckets)
+      def append(h: cat.Handle, id: Long) = {
+        val (lo, hi) = batchRange(id)
+        SemCatalog.append(spark, evenIds(emb, "vec_id", lo, hi), h, id)
+      }
+      def verdicts(h: cat.Handle) = rows(SemCatalog.screen(spark, vecProbe, h))
+    },
+    new Family("vec") {
+      val cat: VecCatalog.type = VecCatalog
+      def land(n: String, nBuckets: Int) =
+        VecCatalog.land(spark, evenIds(emb, "vec_id", 0, 300), n, nBuckets = nBuckets)
+      def append(h: cat.Handle, id: Long) = {
+        val (lo, hi) = batchRange(id)
+        VecCatalog.append(spark, evenIds(emb, "vec_id", lo, hi), h, id)
+      }
+      def verdicts(h: cat.Handle) = rows(VecCatalog.screen(spark, vecProbe, h))
+    },
+    new Family("sig") {
+      val cat: SigCatalog.type = SigCatalog
+      def land(n: String, nBuckets: Int) =
+        SigCatalog.land(spark, evenIds(sigs, "doc_id", 0, 300), n, nBuckets = nBuckets)
+      def append(h: cat.Handle, id: Long) = {
+        val (lo, hi) = batchRange(id)
+        SigCatalog.append(spark, evenIds(sigs, "doc_id", lo, hi), h, id)
+      }
+      def verdicts(h: cat.Handle) = rows(SigCatalog.screen(spark, sigProbe, h))
+    })
+
+  private def suffixes(h: LandedCatalog.Handle): Seq[String] =
+    h.tables.map(_.stripPrefix(new Path(h.root).getName + "_"))
+
+  families.foreach { f =>
+    test(s"an interrupted compact completes from its marker on reattach: ${f.name}") {
+      val name = s"maint_recover_${f.name}"
+      val h = f.land(name)
+      try {
+        f.append(h, 1)
+        f.append(h, 2)
+        val before = f.verdicts(h)
+        assert(before.nonEmpty, s"no ${f.name} verdicts before the crash")
+        // crash mid-compact: the intent marker is down and the first
+        // table's partitions 0..2 are folded into partition 0, but
+        // partitions 1..2 were never dropped and the session died
+        val fs = new Path(h.root).getFileSystem(spark.sessionState.newHadoopConf())
+        LandedCatalog.writeFile(fs, new Path(s"${h.root}/_MAINT"), "compact=2")
+        val t = h.tables.head
+        BucketedLayout.overwritePartitions(spark, spark.table(t)
+          .filter(col("ingest_id") <= 2).drop("ingest_id").distinct()
+          .withColumn("ingest_id", lit(0L)).localCheckpoint(true), t)
+        h.tables.foreach(t => spark.sql(s"DROP TABLE $t"))
+        // reattach runs recovery: the fold completes, the floor advances
+        val h2 = f.land(name)
+        assert(h2 === h)
+        assert(!fs.exists(new Path(s"${h.root}/_MAINT")), "marker not cleared")
+        assert(f.cat.floor(spark, h2) === 2L)
+        suffixes(h2).foreach(sfx => assert(ingestDirs(h2.root, sfx) === Seq("ingest_id=0")))
+        assert(f.verdicts(h2) === before,
+          s"recovered ${f.name} compaction changed screen verdicts")
+      } finally f.cat.drop(spark, h)
+    }
+
+    test(s"re-register uses the persisted bucket count from a parent-format marker: ${f.name}") {
+      val name = s"maint_marker_${f.name}"
+      val h = f.land(name, nBuckets = 4)
+      try {
+        val before = f.verdicts(h)
+        // the marker exactly as the per-family landings wrote it
+        val fs = new Path(h.root).getFileSystem(spark.sessionState.newHadoopConf())
+        LandedCatalog.writeFile(fs, new Path(s"${h.root}/_LANDED"), f.marker(4))
+        h.tables.foreach(t => spark.sql(s"DROP TABLE $t"))
+        // restart with the DEFAULT bucket count: the persisted 4 wins
+        val h2 = f.land(name)
+        h2.tables.foreach { t =>
+          val nb = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+            .bucketSpec.map(_.numBuckets)
+          assert(nb === Some(4), s"$t re-registered with $nb buckets")
+        }
+        f.checkMarker(h2)
+        assert(f.verdicts(h2) === before)
+      } finally f.cat.drop(spark, h)
+    }
   }
 
   test("compact folds partitions without changing screen verdicts; floors reject replays") {
@@ -159,7 +320,7 @@ class CatalogMaintenanceSpec extends AnyFunSuite {
       // simulate a crash between writing the intent marker and the
       // fold: the marker exists, nothing was folded, the session died
       val fs = new Path(cat.root).getFileSystem(spark.sessionState.newHadoopConf())
-      graft.plans.CatalogMaintenance.writeFile(fs,
+      graft.plans.LandedCatalog.writeFile(fs,
         new Path(s"${cat.root}/_MAINT"), "compact=2")
       Seq(cat.bandsT, cat.shinglesT, cat.sizesT)
         .foreach(t => spark.sql(s"DROP TABLE $t"))

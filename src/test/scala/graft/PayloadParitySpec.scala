@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the JIT's huge-method limit — measured ~3.6 ms/doc interpreted).
   * The optimization claim is BYTE IDENTITY, so this spec compares the
   * native expression against the original Column formulation (kept in
-  * Multimodal as *Columns) over a dense id range that covers every
+  * [[PayloadReference]] as *Columns) over a dense id range that covers every
   * planted slice: exact twins (vfp: ≡3 mod 7, ≥8), retouched twins
   * (≡7 mod 11, ≥16), short clips (≡2 mod 13), truncation slices
   * (scene: ≡6 mod 11; vfp: ≡4 mod 9), single-shot docs (scene: ≡0
@@ -29,7 +29,7 @@ class PayloadParitySpec extends AnyFunSuite {
     val diff = spark.range(0, 2000)
       .select(col("id").as("doc_id"),
         graft.operators.Multimodal.scenePayload(col("doc_id")).as("nat"),
-        graft.operators.Multimodal.scenePayloadColumns(col("doc_id")).as("ref"))
+        PayloadReference.scenePayloadColumns(col("doc_id")).as("ref"))
       .filter(not(col("nat") === col("ref")))
       .count()
     assert(diff === 0, "native scene payload diverges from the Column formula")
@@ -39,7 +39,7 @@ class PayloadParitySpec extends AnyFunSuite {
     val diff = spark.range(0, 2000)
       .select(col("id").as("doc_id"),
         graft.operators.Multimodal.vfpPayload(col("doc_id")).as("nat"),
-        graft.operators.Multimodal.vfpPayloadColumns(col("doc_id")).as("ref"))
+        PayloadReference.vfpPayloadColumns(col("doc_id")).as("ref"))
       .filter(not(col("nat") === col("ref")))
       .count()
     assert(diff === 0, "native vfp payload diverges from the Column formula")
@@ -59,7 +59,7 @@ class PayloadParitySpec extends AnyFunSuite {
     val diff = small.union(large)
       .select(
         CE.beacon_raw_tlv(col("uid"), col("eid")).as("nat"),
-        graft.plans.BeaconPipeline.beaconRawTlvColumns(col("uid"), col("eid")).as("ref"))
+        PayloadReference.beaconRawTlvColumns(col("uid"), col("eid")).as("ref"))
       .filter(not(col("nat") === col("ref")))
       .count()
     assert(diff === 0, "native beacon TLV diverges from the Column formula")
